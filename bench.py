@@ -169,8 +169,8 @@ def worker(cpus: int, parquet: str) -> None:
     # sorted sink warms exactly the timed job's operator set — mapInPandas
     # codegen, Python worker fork, Arrow writer init, local sort — with no
     # exchange.  Moving this first-run cost out of the timed window is
-    # worth ~1.0 s at local[32] (exp_shape.py: mean 6.46 s -> 5.42 s,
-    # interleaved best-of-3).
+    # worth ~1.0 s at local[32] (exp_shape.py, since removed, see git
+    # history: mean 6.46 s -> 5.42 s, interleaved best-of-3).
     _force(
         extract_transcripts(
             df.limit(3000), salt=0, partitions=2 * cpus, reassemble="sorted"

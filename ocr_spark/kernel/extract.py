@@ -15,8 +15,10 @@ calls it per Arrow batch inside ``mapInPandas``).  Stages:
    - plain: paragraph split on blank lines
 4. cleanup chain (ordered, vectorized)   — kernel.cleanup
 5. document gate (reject wrong-type docs) — port of ``is_american_nft``
-   (NFT_OCR.py:959-978): >=3 lines each containing >=2 vitamin terms.
-6. field extraction + conflict/absence   — kernel.fields
+   (NFT_OCR.py:959-978): >=3 lines each containing >=2 vitamin terms,
+   found by one alternation scan per line.
+6. field extraction + conflict/absence   — kernel.fields, one pass per row:
+   P1 -> P2 fill-missing -> absence -> expiry -> JSON string.
 7. token spans + counters                — vectorized explode pipeline.
 
 Output columns (stable schema, see ``OUTPUT_SCHEMA`` in pipeline.py):
@@ -57,27 +59,20 @@ _VIT_TERMS = (
     "thiamin", "folate", "pantothenic", "phosphorus", "magnesium", "zinc",
     "manganese", "niacin",
 )
-_VIT_RES = tuple(re.compile(r"\b" + re.escape(t) + r"\b") for t in _VIT_TERMS)
-_ANY_VIT_RE = re.compile("|".join(re.escape(t) for t in _VIT_TERMS))
+# One scan per line finds the same term set as a \b-bounded search per
+# term: no term starts at a word boundary inside another term, and the
+# alternatives that share a start ("vitamin ...") exclude one another, so
+# no match can hide another term's occurrence.  tests/test_property.py
+# checks this against the per-term definition.
+_VIT_SCAN = re.compile(r"\b(?:" + "|".join(re.escape(t) for t in _VIT_TERMS) + r")\b")
 _REJECT_MIN_COUNT = 3
 
 
-_EMPTY_SET: frozenset = frozenset()
-
-
 def _is_american(text: str) -> bool:
-    lines = [ln for block in text.split("\n\n") for ln in block.split("\n")]
     first_line: dict[str, int] = {}
     line_terms: list = []
-    for idx, line in enumerate(lines):
-        # cheap superset prefilter: the unanchored alternation can only
-        # over-match vs the \b-bounded per-term scans, so a miss here
-        # proves no term is present — skips the 14 per-term searches on
-        # the (vast majority of) term-free lines.  Same `present` sets.
-        if _ANY_VIT_RE.search(line) is None:
-            line_terms.append(_EMPTY_SET)
-            continue
-        present = {t for t, rx in zip(_VIT_TERMS, _VIT_RES) if rx.search(line)}
+    for idx, line in enumerate(text.split("\n")):
+        present = set(_VIT_SCAN.findall(line))
         line_terms.append(present)
         for t in present:
             first_line.setdefault(t, idx)
@@ -275,7 +270,7 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
     # 5. document gate (is_american_nft port, NFT_OCR.py:959-978); cheap
     # vectorized prefilter, then the exact first-occurrence-line rule on
     # the few candidate rows
-    has_vit = cleaned.str.contains(_ANY_VIT_RE, regex=True).fillna(False).astype(bool)
+    has_vit = cleaned.str.contains(_VIT_SCAN, regex=True).fillna(False).astype(bool)
     reject_mask = pd.Series(False, index=cleaned.index)
     if has_vit.any():
         reject_mask.loc[has_vit] = cleaned[has_vit].map(_is_american).astype(bool)

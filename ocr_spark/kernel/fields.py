@@ -15,9 +15,15 @@ Re-expresses, over cleaned transcript text, the reference's extraction core:
 - absence inference: "not a significant source of X, Y" -> "absent"
                                            NFT_OCR.py:1360-1395
 
-Everything is whole-Series pandas (extractall / map / groupby) — no per-row
-Python.  Output is a deterministic JSON string per turn (sorted field keys),
-so byte-equality is the parity check.
+One pass per row: P1, then P2 filling missing cells, then absence, then
+expiry, then the JSON string, with per-field state in a small dict (a row
+has at most 25 fields, too few for a general hash aggregation to pay).
+Only a vectorized term prefilter runs over the whole Series.  Matches are
+read as ``Pattern.findall`` tuples, not ``Match`` objects: no group (term,
+qty, unit, dv) can match the empty string, so ``""`` in a tuple stands
+exactly for a group that did not take part.  Output is a deterministic
+JSON string per turn (sorted field keys), so byte-equality is the parity
+check.
 """
 
 from __future__ import annotations
@@ -56,7 +62,6 @@ VOCAB: tuple[tuple[str, str], ...] = (
 )
 
 TERM_TO_FIELD = {t: f for t, f in VOCAB}
-FIELDS = sorted({f for _, f in VOCAB})
 
 UNIT_WHITELIST = ("kcal", "mg", "ml", "ug", "g")
 
@@ -71,77 +76,82 @@ _P1 = re.compile(
     rf"\b(?P<term>{_TERM_ALT})\b:?(?:[ ]?(?P<qty>\d+(?:\.\d+)?)(?![.\d])(?![ ]?%)[ ]?"
     rf"(?P<unit>{_UNIT_ALT})?\b)?(?:[ ]?(?P<dv>\d+(?:\.\d+)?)[ ]?%)?"
 )
-# pass 2 (scoped re-extract): qty [unit] term
+# pass 2 (scoped re-extract): qty [unit] term; findall tuples are
+# (qty, unit, term)
 _P2 = re.compile(
     rf"\b(?P<qty>\d+(?:\.\d+)?)[ ]?(?P<unit>{_UNIT_ALT})?[ ]"
     rf"(?:of )?(?P<term>{_TERM_ALT})\b"
 )
-_ABSENT = re.compile(r"not a significant source of (?P<list>[a-z ,]+)")
-
-# cheap vectorized prefilters (STRING patterns — kept in the RE2∩re subset
-# so Arrow-backed Series stay on the RE2 fast path, see cleanup.py):
-# extractall is the kernel's hottest call, and most rows can be excluded
-# before it runs without changing a single match.
-_ANY_TERM_PAT = "|".join(re.escape(t) for t, _ in VOCAB)
 _ABSENT_PAT = "not a significant source of "
+_ABSENT = re.compile(_ABSENT_PAT + r"([a-z ,]+)")
 
 CONFLICT = "conflict"
 ABSENT = "absent"
 MISSING = ""
 
 
-def _match_frame(s: pd.Series, pattern: re.Pattern) -> pd.DataFrame:
-    """finditer -> (row, field, qty, unit, dv) long frame.
-
-    A direct per-row ``finditer`` loop with flat list accumulation: the
-    same matches in the same order as ``str.extractall``, without its
-    per-match MultiIndex machinery — measured 1.6x faster on termed
-    batches and verified frame- and fields_json-byte-identical before the
-    swap (round 3; extractall was the kernel's hottest call)."""
-    rows: list = []
-    fields: list = []
-    qtys: list = []
-    units: list = []
-    dvs: list = []
-    t2f = TERM_TO_FIELD
-    finditer = pattern.finditer
-    for idx, text in s.items():
-        for m in finditer(text):
-            g = m.groupdict()
-            f = t2f.get(g.get("term"))
-            if f is None:
-                continue
-            rows.append(idx)
-            fields.append(f)
-            qtys.append(g.get("qty"))
-            units.append(g.get("unit"))
-            dvs.append(g.get("dv"))
-    return pd.DataFrame(
-        {"row": rows, "field": fields, "qty": qtys, "unit": units, "dv": dvs}
-    )
+def _resolve(matches, fields: dict[str, list[str]]) -> None:
+    """Conflict-detecting merge of one pass's matches into ``fields``
+    (A1 semantics): qty is the one distinct value seen, "conflict" for
+    two or more, MISSING for none; unit and dv are the first non-empty
+    value in match order."""
+    for field, qty, unit, dv in matches:
+        cur = fields.get(field)
+        if cur is None:
+            fields[field] = [qty, unit, dv]
+            continue
+        if qty and cur[0] != qty:
+            cur[0] = qty if not cur[0] else CONFLICT
+        if not cur[1]:
+            cur[1] = unit
+        if not cur[2]:
+            cur[2] = dv
 
 
-def _resolve(frame: pd.DataFrame) -> pd.DataFrame:
-    """Conflict-detecting merge per (row, field) — A1 semantics.
-
-    distinct non-null qty count: 0 -> MISSING, 1 -> that value,
-    >1 -> "conflict".  unit/dv: first non-null in match order.
-    """
-    if frame.empty:
-        return pd.DataFrame(columns=["row", "field", "qty", "unit", "dv"])
-    g = frame.groupby(["row", "field"], sort=False)
-    qty_n = g["qty"].nunique()
-    qty_first = g["qty"].first()  # first non-null per pandas groupby.first
-    unit = g["unit"].first()
-    dv = g["dv"].first()
-    out = pd.DataFrame(
-        {
-            "qty": qty_first.where(qty_n == 1, CONFLICT).where(qty_n > 0, MISSING),
-            "unit": unit,
-            "dv": dv,
-        }
-    ).reset_index()
-    return out
+def _row_fields(text: str, termed: bool, date: str | None) -> tuple[str, int]:
+    """One row: P1 -> P2 fill-missing -> absence -> expiry -> JSON."""
+    fields: dict[str, list[str]] = {}
+    absent: set[str] = set()
+    if termed:
+        t2f = TERM_TO_FIELD
+        _resolve(((t2f[t], q, u, d) for t, q, u, d in _P1.findall(text)), fields)
+        # pass 2 only fills cells that pass 1 left missing (fill-missing
+        # merge, merge_results NFT_OCR.py:1415-1441 with
+        # test_conflicts=False), per column: a field with a qty can still
+        # take its unit from P2.  P2 runs only when some cell is missing.
+        if not fields or not all(all(v) for v in fields.values()):
+            p2: dict[str, list[str]] = {}
+            _resolve(((t2f[t], q, u, "") for q, u, t in _P2.findall(text)), p2)
+            for field, alt in p2.items():
+                cur = fields.setdefault(field, alt)
+                for i in (0, 1):
+                    if not cur[i]:
+                        cur[i] = alt[i]
+        # absence inference: listed fields with no quantity -> "absent"
+        if _ABSENT_PAT in text:
+            for listed in _ABSENT.findall(text):
+                for term in listed.split(","):
+                    field = t2f.get(term.strip())
+                    if field is not None:
+                        absent.add(field)
+                        fields.setdefault(field, [MISSING, MISSING, MISSING])
+    # expiry dates (pre-extracted from raw text) join the field table as a
+    # first-class "expiry" field — the reference's extract_expiry result
+    # lands in the same per-document record (Ingredients_OCR.py:295-305)
+    if date is not None:
+        fields["expiry"] = [date, MISSING, MISSING]
+    if not fields:
+        return "{}", 0
+    items = []
+    for field in sorted(fields):
+        qty, unit, dv = fields[field]
+        if not qty and field in absent:
+            qty = ABSENT
+        status = qty if qty in (CONFLICT, ABSENT) else "ok" if qty else "missing"
+        items.append(
+            f'"{field}":{{"qty":"{qty}","unit":"{unit}","dv":"{dv}","status":"{status}"}}'
+        )
+    return "{" + ",".join(items) + "}", len(items)
 
 
 def extract_fields_series(
@@ -157,112 +167,20 @@ def extract_fields_series(
     date strings (``extract_expiry``, Ingredients_OCR.py:295-305); non-null
     entries become an ``expiry`` field with the date as qty, status ok.
     """
-    # prefilter: a row with no vocabulary term cannot produce a P1/P2
-    # match (both patterns require \b<term>\b, and the unanchored literal
-    # alternation is a superset of the bounded one), so extractall —
-    # per-match Python row assembly, the hottest kernel call — runs only
-    # on term-bearing rows.  Identical matches by construction.
+    # prefilter: a row with no vocabulary term gets no field from P1, P2
+    # or absence (each needs a vocabulary term, and the unanchored literal
+    # alternation is a superset of the bounded one)
     has_term = (
-        cleaned.str.contains(_ANY_TERM_PAT, regex=True).fillna(False).astype(bool)
+        cleaned.str.contains(_TERM_ALT, regex=True).fillna(False).astype(bool)
     )
-    termed = cleaned[has_term]
-    p1 = _resolve(_match_frame(termed, _P1))
-
-    # pass 2 only fills cells that pass 1 left missing (fill-missing merge,
-    # merge_results NFT_OCR.py:1415-1441 with test_conflicts=False) — and
-    # the fill is PER COLUMN: a field with qty present can still backfill
-    # its unit or dv from P2.  Any (row, field) P2 can touch also appears
-    # in P1 (P2's term match is the same \b-bounded alternation, and a
-    # bare term always P1-matches), so P2 only needs the rows where P1
-    # left ANY of qty/unit/dv missing, plus the (theoretical) term-bearing
-    # rows P1 produced nothing for.
-    p1_missing = (
-        p1["qty"].isna()
-        | (p1["qty"] == MISSING)
-        | p1["unit"].isna()
-        | (p1["unit"] == MISSING)
-        | p1["dv"].isna()
-        | (p1["dv"] == MISSING)
-    )
-    p2_rows = set(p1.loc[p1_missing, "row"]) | (
-        set(termed.index) - set(p1["row"])
-    )
-    p2 = _resolve(_match_frame(termed.loc[sorted(p2_rows)], _P2))
-    if not p2.empty:
-        merged = p1.merge(p2, on=["row", "field"], how="outer", suffixes=("", "_2"))
-        for col in ("qty", "unit", "dv"):
-            alt = merged[f"{col}_2"]
-            base = merged[col]
-            take_alt = base.isna() | (base == MISSING)
-            merged[col] = base.where(~take_alt, alt)
-        res = merged[["row", "field", "qty", "unit", "dv"]]
-    else:
-        res = p1
-
-    # absence inference: listed fields with no extracted quantity -> "absent"
-    has_absent = (
-        cleaned.str.contains(_ABSENT_PAT, regex=False).fillna(False).astype(bool)
-    )
-    ab = cleaned[has_absent].str.extractall(_ABSENT)
-    if not ab.empty:
-        ab = ab.reset_index(level=-1, drop=True)["list"]
-        ab = ab.str.split(",").explode().str.strip()
-        ab_frame = pd.DataFrame(
-            {"row": ab.index, "field": ab.map(TERM_TO_FIELD)}
-        ).dropna()
-        if not ab_frame.empty:
-            ab_frame = ab_frame.drop_duplicates()
-            res = res.merge(ab_frame.assign(absent=True), on=["row", "field"], how="outer")
-            res["absent"] = res["absent"].eq(True)
-        else:
-            res = res.assign(absent=False)
-    else:
-        res = res.assign(absent=False)
-
-    # expiry dates (pre-extracted from raw text) join the field table as a
-    # first-class "expiry" field — the reference's extract_expiry result
-    # lands in the same per-document record (Ingredients_OCR.py:295-305)
+    dates: dict = {}
     if expiry is not None:
         exp = expiry.dropna()
-        if not exp.empty:
-            exp_frame = pd.DataFrame(
-                {
-                    "row": exp.index,
-                    "field": "expiry",
-                    "qty": exp.astype(str).values,
-                    "unit": None,
-                    "dv": None,
-                    "absent": False,
-                }
-            )
-            res = pd.concat(
-                [res if not res.empty else None, exp_frame], ignore_index=True
-            )
-
-    if res.empty:
-        empty = pd.Series("{}", index=cleaned.index)
-        return empty, pd.Series(0, index=cleaned.index)
-
-    no_qty = res["qty"].isna() | (res["qty"] == MISSING)
-    res["qty"] = res["qty"].where(~(no_qty & res["absent"]), ABSENT)
-    res["status"] = "ok"
-    res.loc[res["qty"] == CONFLICT, "status"] = CONFLICT
-    res.loc[res["qty"] == ABSENT, "status"] = ABSENT
-    res.loc[res["qty"].isna() | (res["qty"] == MISSING), "status"] = "missing"
-
-    # deterministic JSON assembly, vectorized
-    def _jstr(col: pd.Series) -> pd.Series:
-        return col.fillna("").astype(str)
-
-    item = (
-        '"' + res["field"] + '":{"qty":"' + _jstr(res["qty"])
-        + '","unit":"' + _jstr(res["unit"])
-        + '","dv":"' + _jstr(res["dv"])
-        + '","status":"' + res["status"] + '"}'
-    )
-    res = res.assign(item=item).sort_values(["row", "field"], kind="mergesort")
-    joined = res.groupby("row", sort=False)["item"].agg(",".join)
-    counts = res.groupby("row", sort=False)["item"].size()
-    fields_json = ("{" + joined + "}").reindex(cleaned.index, fill_value="{}")
-    n_fields = counts.reindex(cleaned.index, fill_value=0).astype("int64")
+        dates = dict(zip(exp.index, exp.astype(str)))
+    out = [
+        _row_fields(text, termed, dates.get(idx)) if termed or idx in dates else ("{}", 0)
+        for idx, text, termed in zip(cleaned.index, cleaned.tolist(), has_term.tolist())
+    ]
+    fields_json = pd.Series([j for j, _ in out], index=cleaned.index, dtype=object)
+    n_fields = pd.Series([n for _, n in out], index=cleaned.index, dtype="int64")
     return fields_json, n_fields

@@ -21,11 +21,11 @@ Design notes (100 TB posture):
     (``repartition(hash(conv_id), pmod(hash(turn_idx), salt))``) runs
     when the input arrives with fewer partitions than the session's
     parallelism (an upstream agg, a handful of giant unsplittable inputs)
-    OR when its plan contains a wide node that can correlate partition
-    membership with key values (a groupBy/sort/repartition on conv_id
-    co-locates whole conversations, so partition count alone proves
-    nothing) — exactly the cases where skew insurance pays for its
-    shuffle.
+    OR when its plan is anything but a plain scan under Project/Filter,
+    since any other node can correlate partition membership with key
+    values (a groupBy/sort/repartition on conv_id co-locates whole
+    conversations, so partition count alone proves nothing) — exactly
+    the cases where skew insurance pays for its shuffle.
   * **reassembly** (``reassemble``): the global (conv_id, turn_idx) window
     stays for full-fidelity artifacts, but the at-scale bucketed-sink
     posture is ``"sorted"`` — ``sortWithinPartitions`` gives each output
@@ -90,34 +90,31 @@ def _extract_map_no_spans(batches):
 
 DEFAULT_SALT = 8
 
-# Logical-plan nodes after which partition layout can CORRELATE with key
-# values (a groupBy/repartition/sort/join by conv_id co-locates whole
-# conversations, so one partition can hold a 10^5-turn conversation even
-# when the partition COUNT looks healthy).  A plain file scan
-# (Relation/Filter/Project only) has size-bounded splits instead —
-# `spark.sql.files.maxPartitionBytes` caps any task's bytes regardless of
-# conversation length — which is the only case where skipping the salted
-# repartition is safe.
-_KEY_CORRELATED_NODES = (
-    "Aggregate",
-    "Join",
-    "Window",
-    "Sort",
-    "RepartitionByExpression",
-    "Deduplicate",
-    "GlobalLimit",
-    "LogicalRDD",  # opaque RDD-backed input: partitioning unknowable, assume the worst
-)
+# Logical-plan nodes that keep a scan's own partitions.  A plain scan
+# (file relation or local data, under Project/Filter only) has
+# size-bounded splits — `spark.sql.files.maxPartitionBytes` caps any task's
+# bytes regardless of conversation length.  Any other node (groupBy,
+# grouped-map pandas UDFs, join, sort, repartition, cache, RDD input, ...)
+# may make partition membership a function of key values, so one
+# partition can hold a 10^5-turn conversation even when the partition
+# COUNT looks healthy.  An allowlist fails safe: a node it does not know
+# keeps the salted repartition.
+_SCAN_SHAPED_NODES = frozenset({"LogicalRelation", "LocalRelation", "Project", "Filter"})
 
 
 def _partitioning_may_correlate(df: DataFrame) -> bool:
-    """True when the input's optimized logical plan contains any node that
-    can make partition membership a function of key values (see
-    ``_KEY_CORRELATED_NODES``) — the case where partition-count heuristics
-    are blind to long-conversation skew and salt="auto" must keep the
-    salted repartition."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return any(node in plan for node in _KEY_CORRELATED_NODES)
+    """True unless every node of the input's optimized logical plan is
+    scan-shaped (see ``_SCAN_SHAPED_NODES``) — otherwise partition-count
+    heuristics are blind to long-conversation skew and salt="auto" must
+    keep the salted repartition."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() not in _SCAN_SHAPED_NODES:
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
 
 
 def extract_transcripts(
@@ -138,11 +135,12 @@ def extract_transcripts(
         conversation length: >= the target partition count gets a narrow
         ``coalesce`` to even the task waves (no exchange); >= the
         session's default parallelism passes through untouched.  An input
-        whose plan contains a wide node (groupBy, join, sort, repartition
-        by key, ...) keeps the salted repartition REGARDLESS of partition
-        count — after a shuffle keyed on conv_id, one partition can hold
-        a 10^5-turn conversation while the count looks healthy — as does
-        an under-partitioned input (fewer partitions than cores).
+        whose plan contains any other node (groupBy, grouped-map pandas
+        UDF, join, sort, repartition by key, ...) keeps the salted
+        repartition REGARDLESS of partition count — after a shuffle keyed
+        on conv_id, one partition can hold a 10^5-turn conversation while
+        the count looks healthy — as does an under-partitioned input
+        (fewer partitions than cores).
       - int > 0: unconditional skew insurance — spread each conversation
         over ``salt`` shuffle buckets (``repartition(hash(conv_id),
         pmod(hash(turn_idx), salt))``).

@@ -143,3 +143,24 @@ def test_enriched_counts_pin_derives_from_oracle_mirror(spark):
         assert list(derived[col]) == list(pinned[col]), col
     for col in ("n_turns", "sum_corrections", "sum_chars"):
         assert [int(x) for x in derived[col]] == [int(x) for x in pinned[col]], col
+
+
+def test_oracle_enrich_null_text_is_tokenless():
+    """A null ``extracted_text`` (NaN or None, as a nullable column reads
+    back) is a token-less turn, like the Spark side's null-safe split."""
+    from ocr_spark.oracle import oracle_enrich
+
+    extracted = pd.DataFrame(
+        {
+            "conv_id": ["c", "c", "c"],
+            "turn_idx": [0, 1, 2],
+            "status": ["empty", "empty", "ok"],
+            "extracted_text": [float("nan"), None, "fresh sodiom sauce"],
+        }
+    )
+    out = oracle_enrich(extracted, LEXICON)
+    assert out[["corrected_text", "n_corrections", "language"]].values.tolist() == [
+        ["", 0, "und"],
+        ["", 0, "und"],
+        ["fresh sodium sauce", 1, "und"],
+    ]

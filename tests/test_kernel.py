@@ -254,6 +254,78 @@ def test_dv_percent():
     assert f["fat"]["dv"] == "15"
 
 
+def _field_row(text, expiry=None):
+    from ocr_spark.kernel.fields import extract_fields_series
+
+    fields_json, n = extract_fields_series(
+        pd.Series([text]), expiry=None if expiry is None else pd.Series([expiry])
+    )
+    return fields_json.iloc[0], int(n.iloc[0])
+
+
+def _item(field, qty="", unit="", dv="", status="ok"):
+    return f'"{field}":{{"qty":"{qty}","unit":"{unit}","dv":"{dv}","status":"{status}"}}'
+
+
+def test_fields_pass2_on_missing_dv_alone_keeps_pass1():
+    """A missing dv alone sends the row to pass 2, which has no dv group:
+    dv stays empty, and pass 2's qty/unit never override pass 1's."""
+    assert _field_row("protein 10 g\n5 mg of protein") == (
+        "{" + _item("protein", "10", "g") + "}", 1
+    )
+
+
+def test_fields_values_found_only_by_pass2():
+    """Pass 1 sees only the bare term; every value comes from pass 2,
+    including pass 2's own conflict."""
+    assert _field_row("calories 90\n10 g of fibre") == (
+        "{" + _item("calories", "90") + "," + _item("fibre", "10", "g") + "}", 2
+    )
+    assert _field_row("fibre\n5 g fibre\n6 g fibre") == (
+        "{" + _item("fibre", "conflict", "g", status="conflict") + "}", 1
+    )
+
+
+def test_fields_unit_from_later_pass1_match():
+    assert _field_row("sodium 100\n\nsodium 100 mg") == (
+        "{" + _item("sodium", "100", "mg") + "}", 1
+    )
+
+
+def test_fields_absence_semantics():
+    # a field with a qty keeps it
+    assert _field_row("iron 5 mg\nnot a significant source of iron") == (
+        "{" + _item("iron", "5", "mg") + "}", 1
+    )
+    # a bare-term field becomes absent, its dv kept
+    assert _field_row("calcium 20 %\nnot a significant source of calcium") == (
+        "{" + _item("calcium", "absent", dv="20", status="absent") + "}", 1
+    )
+    # a field named only in the absence list
+    assert _field_row("calories 90\nnot a significant source of fibre") == (
+        "{" + _item("calories", "90") + "," + _item("fibre", "absent", status="absent") + "}",
+        2,
+    )
+    # a list entry that is not one vocabulary term marks nothing absent
+    assert _field_row("fat 1 g\nnot a significant source of fibre and iron") == (
+        "{" + _item("fat", "1", "g") + "," + _item("fibre", status="missing") + ","
+        + _item("iron", status="missing") + "}",
+        3,
+    )
+
+
+def test_fields_expiry_sorted_among_fields():
+    assert _field_row("calcium 10 mg\nsodium 5 mg", expiry="2024 JAN 05") == (
+        "{" + _item("calcium", "10", "mg") + "," + _item("expiry", "2024 JAN 05") + ","
+        + _item("sodium", "5", "mg") + "}",
+        3,
+    )
+    # a date alone, on a row with no vocabulary term
+    assert _field_row("best before", expiry="MAR 03 2025") == (
+        "{" + _item("expiry", "MAR 03 2025") + "}", 1
+    )
+
+
 def test_reject_gate():  # is_american_nft port (F5)
     # one line with three distinct gate terms (count >= 3, NFT_OCR.py:977)
     text = "vitamin a 5 % vitamin c 10 % vitamin d 25 %\ncalcium 10 %"

@@ -121,6 +121,48 @@ def test_auto_salt_keeps_insurance_on_key_correlated_input(spark, tmp_path):
     assert "pmod" in executed, executed  # the salt expression is present
 
 
+def test_auto_salt_keeps_insurance_on_grouped_map_inputs(spark, tmp_path):
+    """A grouped-map (or cogrouped) pandas UDF over conv_id hands the
+    kernel whole conversations per partition, with a healthy partition
+    count: salt="auto" must keep the salted repartition."""
+    path = str(tmp_path / "t6.parquet")
+    spark.createDataFrame(synth.generate_local(40)).write.parquet(path)
+    df = spark.read.parquet(path)
+    grouped = df.groupBy("conv_id")
+    inputs = {
+        "applyInPandas": grouped.applyInPandas(lambda pdf: pdf, df.schema),
+        "cogroup": grouped.cogroup(grouped).applyInPandas(lambda a, b: a, df.schema),
+    }
+    # keep the grouped shuffle's 8 partitions (at scale AQE would not merge
+    # them); merged down to 1, the under-partitioned rule would salt anyway
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        for name, grouped_df in inputs.items():
+            assert grouped_df.rdd.getNumPartitions() >= 8, name  # the count looks healthy
+            out = extract_transcripts(grouped_df, salt="auto", partitions=8, reassemble=False)
+            _, executed = _plan(out)
+            assert "pmod" in executed, (name, executed)  # the salt expression
+    finally:
+        spark.conf.unset(key)
+
+
+def test_auto_salt_scan_shapes_stay_in_place(spark, tmp_path):
+    """Only plain scans under Project/Filter skip the salt decision's skew
+    insurance; every other node is assumed key-correlated."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.pipeline import _partitioning_may_correlate
+
+    path = str(tmp_path / "t7.parquet")
+    spark.createDataFrame(synth.generate_local(10)).write.parquet(path)
+    df = spark.read.parquet(path)
+    for scan in (df, df.filter(F.col("turn_idx") > 0).select(*INPUT_COLUMNS)):
+        assert not _partitioning_may_correlate(scan)
+    for other in (df.sample(0.5, seed=1), df.union(df), df.limit(5), df.coalesce(1)):
+        assert _partitioning_may_correlate(other)
+
+
 def test_auto_sorted_output_matches_salted_windowed(spark, tmp_path):
     """Mode equivalence: the exchange-free posture yields the same row SET
     as the full salted+windowed pipeline (minus the derivable window

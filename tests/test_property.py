@@ -11,11 +11,19 @@ on arbitrary unicode payloads (F11 null-guard semantics).
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from ocr_spark.kernel.extract import OUTPUT_COLUMNS, extract_batch
+from ocr_spark.kernel.extract import (
+    _VIT_SCAN,
+    _VIT_TERMS,
+    OUTPUT_COLUMNS,
+    _is_american,
+    extract_batch,
+)
 
 # Payload soup: plain unicode, HTML-ish fragments, tool JSON, pathological
 # whitespace/controls — far outside the synthetic generator's classes.
@@ -83,3 +91,42 @@ def test_nan_and_none_payloads():
     )
     out = extract_batch(pdf)
     assert out["status"].tolist() == ["empty", "empty"]
+
+
+# --- document gate: one scan per line == one search per term ---------------
+
+# the per-term definition of is_american_nft (NFT_OCR.py:959-978): one
+# \b-bounded search per vocabulary term, per line
+_VIT_RES = tuple(re.compile(r"\b" + re.escape(t) + r"\b") for t in _VIT_TERMS)
+
+
+def _spec_line_terms(line: str) -> set[str]:
+    return {t for t, rx in zip(_VIT_TERMS, _VIT_RES) if rx.search(line)}
+
+
+def _spec_is_american(text: str) -> bool:
+    lines = [ln for block in text.split("\n\n") for ln in block.split("\n")]
+    line_terms = [_spec_line_terms(line) for line in lines]
+    first_line: dict[str, int] = {}
+    for idx, present in enumerate(line_terms):
+        for t in present:
+            first_line.setdefault(t, idx)
+    return sum(1 for ln in first_line.values() if len(line_terms[ln]) >= 2) >= 3
+
+
+# whole terms, every prefix of each term, digits and separators: text
+# where terms abut, nest in longer words and share lines
+_gate_piece = st.one_of(
+    st.sampled_from(_VIT_TERMS),
+    st.sampled_from(sorted({t[:k] for t in _VIT_TERMS for k in range(1, len(t))})),
+    st.sampled_from(list("0123456789") + [" ", "\n", "\n\n", ",", ":", "%", "/", "-", "s"]),
+)
+_gate_text = st.lists(_gate_piece, max_size=40).map("".join)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_gate_text)
+def test_gate_one_scan_matches_per_term_search(text):
+    for line in text.split("\n"):
+        assert set(_VIT_SCAN.findall(line)) == _spec_line_terms(line), line
+    assert _is_american(text) == _spec_is_american(text)
