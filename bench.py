@@ -16,9 +16,10 @@ Two workloads:
 2. The extraction pipeline (the north-star job) over deterministic
    synthetic transcripts, run in fresh subprocess JVMs at parallelism N
    and 4N cores (default 8 vs 32 — the mandated local[8]/local[32]
-   stand-in for an N- vs 4N-executor cluster), each process tree
-   CPU-pinned to exactly its core budget, interleaved best-of-reps per
-   level, with a no-Spark multiprocessing control on the same input.
+   stand-in for an N- vs 4N-executor cluster; 1 vs nproc when 4N cores
+   do not fit the machine), each process tree CPU-pinned to exactly its
+   core budget, interleaved best-of-reps per level, with a no-Spark
+   multiprocessing control on the same input.
    Reports turns/sec at both levels, scaling efficiency
    = tput(4N) / (4 * tput(N)), and the control-normalized efficiency.
    The north rule requires efficiency >= 0.8; see BENCH.md and SCALE.md
@@ -79,6 +80,30 @@ HEADLINE = [
 ]
 
 
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of MemTotal, at most 16g: in local mode the driver heap is the
+    whole JVM, and the Python workers need the rest of the machine."""
+    with open(meminfo) as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(16 * 1024, kb // 2048)}m"
+
+
+def _scale_levels(n: int, nproc: int) -> tuple[int, int]:
+    """(lo, hi) parallelism levels of a scaling pair based at ``n``: n vs
+    4n when 4n cores fit in ``nproc``, else 1 vs nproc.  Every level is
+    <= nproc, so each run can be pinned to cores the process may use."""
+    return (n, 4 * n) if 4 * n <= nproc else (1, nproc)
+
+
+def _pin_cores(k: int, allowed) -> list[int]:
+    """The ``k`` highest core ids in the ``allowed`` affinity set: host
+    housekeeping and steal concentrate on low-numbered vCPUs."""
+    cores = sorted(allowed)
+    if not 0 < k <= len(cores):
+        raise ValueError(f"cannot pin {k} cores out of {len(cores)}")
+    return cores[-k:]
+
+
 def _session(cpus: int, shuffle_partitions: int | None = None):
     from pyspark.sql import SparkSession
 
@@ -94,7 +119,7 @@ def _session(cpus: int, shuffle_partitions: int | None = None):
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", _driver_memory())
         .getOrCreate()
     )
 
@@ -219,7 +244,6 @@ def control_once(turns: int, k: int) -> float:
     steal windows and report a nonsense (even superlinear) ceiling."""
     import multiprocessing as mp
 
-    total = os.cpu_count() or 32
     base_affinity = os.sched_getaffinity(0)
     nchunk = 4 * k
     step = (turns + nchunk - 1) // nchunk
@@ -228,7 +252,7 @@ def control_once(turns: int, k: int) -> float:
     # the Spark run at this level used — without this the control floats
     # to whatever cores are quiet and systematically beats the pinned
     # Spark runs, skewing the normalization
-    os.sched_setaffinity(0, set(range(total - k, total)))
+    os.sched_setaffinity(0, set(_pin_cores(k, base_affinity)))
     try:
         with mp.Pool(k) as pool:
             t0 = time.time()
@@ -256,7 +280,8 @@ def _worker_sec(r: subprocess.CompletedProcess) -> float | None:
 
 def run_scaling(cpus: int) -> dict:
     """N vs 4N cores on identical input (sandbox stand-in for N vs 4N
-    executors), at the mandated levels local[8] vs local[32].
+    executors), at the mandated levels local[8] vs local[32] where the
+    machine has 32 cores; levels never exceed nproc (``_scale_levels``).
 
     Caveat this machine measures alongside itself: the VM throttles
     per-core throughput ~15-30% once more than ~16 of its 32 cores are
@@ -279,14 +304,17 @@ def run_scaling(cpus: int) -> dict:
 
     # primary: the mandated local[8] vs local[32]
     parquet, turns = _ensure_transcripts(cpus)
-    lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", str(max(2, cpus // 4))))
+    nproc = len(os.sched_getaffinity(0))
+    lo, hi = _scale_levels(
+        int(os.environ.get("SPARK_GRAFT_SCALE_N", str(max(2, cpus // 4)))), nproc
+    )
     # 4 reps when the soft budget permits (the rep loop is deadline-gated,
     # so slow windows still stop at whatever fits): local[32] is bimodal
     # on this host — occasional 2-3x collapses while the controls barely
     # move — and one extra interleaved sample materially raises the odds
     # that the best-of series contains an uncollapsed wide run.
     reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "4"))
-    out = _measure_pair(parquet, turns, lo, 4 * lo, reps, deadline, taskset)
+    out = _measure_pair(parquet, turns, lo, hi, reps, deadline, taskset)
     out["convs"] = SCALE_CONVS
 
     # Collapse rescue: this host's local[32] collapse windows are minutes
@@ -311,8 +339,8 @@ def run_scaling(cpus: int) -> dict:
         and time.time() < deadline
     ):
         time.sleep(25)
-        rescue = _measure_pair(parquet, turns, lo, 4 * lo, 1, deadline + 60, taskset)
-        out = _merge_pair(out, rescue, lo, 4 * lo)
+        rescue = _measure_pair(parquet, turns, lo, hi, 1, deadline + 60, taskset)
+        out = _merge_pair(out, rescue, lo, hi)
     # If the pair STILL shows the collapse signature after the rescue,
     # label it explicitly: the control evidence (control.efficiency) is
     # printed inline, so a grader can see whether the box or the job
@@ -333,14 +361,15 @@ def run_scaling(cpus: int) -> dict:
     # efficiency measurement taken where the hardware permits scaling —
     # the evidence outranks ~1.5 min of worst-case wall.
     lo2 = int(os.environ.get("SPARK_GRAFT_SCALE_N2", "2"))
-    if lo2 and 4 * lo2 != 4 * lo:
+    lo2, hi2 = _scale_levels(lo2, nproc) if lo2 else (lo, hi)
+    if (lo2, hi2) != (lo, hi):
         # 20k convs (~106k turns): big enough that fixed per-job overhead
         # (~2.5s) stays small next to the local[2] kernel time; 12k was
         # measured to understate efficiency at local[8] for this reason
         convs2 = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS2", "20000"))
         pq2, turns2 = _ensure_transcripts(cpus, convs2)
         sec_pair = _measure_pair(
-            pq2, turns2, lo2, 4 * lo2, min(reps, 2), deadline + 60, taskset
+            pq2, turns2, lo2, hi2, min(reps, 2), deadline + 60, taskset
         )
         sec_pair["convs"] = convs2
         out["secondary"] = sec_pair
@@ -456,8 +485,8 @@ def _measure_pair(
             # cores, inflating the low-parallelism baseline and
             # understating scaling.  HIGH core ids: host housekeeping and
             # steal concentrate on low-numbered vCPUs (measured ~5-10%).
-            total = os.cpu_count() or 32
-            pin = [taskset, "-c", f"{total - k}-{total - 1}"] if taskset else []
+            cores = _pin_cores(k, os.sched_getaffinity(0))
+            pin = [taskset, "-c", ",".join(map(str, cores))] if taskset else []
             r = subprocess.run(
                 pin
                 + [sys.executable, os.path.abspath(__file__), "--worker", str(k), parquet],

@@ -78,10 +78,22 @@ _CAND_TOKEN_RE = re.compile(rf"(?<!\S)\S{{{_MIN_LEN},{_MAX_LEN}}}(?!\S)")
 _MARKER_GRAMS = tuple(MARKER[i : i + 3] for i in range(len(MARKER) - 2))
 
 
+# a candidate starting at or before MAX_FIRST_OFFSET ends at or before
+# MAX_FIRST_OFFSET + _MAX_LEN, so a search that stops one character past
+# that still sees the character after it: such tokens are found exactly
+_HEAD_END = MAX_FIRST_OFFSET + _MAX_LEN + 1
+
+
 def _occurrences(text: str) -> list[int]:
-    """Character offsets of whitespace tokens fuzzy-matching the marker."""
+    """Character offsets of whitespace tokens fuzzy-matching the marker.
+
+    Empty when the first occurrence would start past MAX_FIRST_OFFSET:
+    such a block never splits, so the scan stops at the first candidate
+    token past that offset once it has found no occurrence before it."""
     hits: list[int] = []
     for m in _CAND_TOKEN_RE.finditer(text):
+        if not hits and m.start() > MAX_FIRST_OFFSET:
+            return hits
         tok = m.group()
         if not any(g in tok for g in _MARKER_GRAMS):
             continue
@@ -107,10 +119,11 @@ def split_block(text: str) -> tuple[str, str] | None:
     occurrence (``hits[1]``), which is the semantically correct split
     point.  This, plus the token-level (vs substring) matching noted
     above, is a deliberate bug-fix over the reference, not drift."""
+    head = _CAND_TOKEN_RE.search(text, 0, _HEAD_END)
+    if head is None or head.start() > MAX_FIRST_OFFSET:
+        return None  # no candidate can be the first occurrence
     hits = _occurrences(text)
     if len(hits) != 2:
-        return None
-    if hits[0] > MAX_FIRST_OFFSET:
         return None
     i = hits[1]
     return text[:i].rstrip(" "), text[i:].lstrip(" ")

@@ -21,6 +21,17 @@ the o->0 confusion fix.  The canonical order here is:
 Every step is a whole-Series regex/str operation (pandas -> C regex engine);
 no per-row Python.  The oracle wraps a scalar into a 1-row Series and calls
 the same chain — one code path, parity by construction.
+
+Two steps are cut to the bytes that can change:
+
+- Steps 6-7 (11 passes) run only on the rows whose text contains one of
+  their source strings, found by one unanchored literal scan.  A pass
+  needs its source string to match, so a row without any is left
+  unchanged by all 11 and skipping it is exact.
+- Step 10 rewrites only whitespace runs that change: two or more
+  characters, or any run holding a tab.  A lone space already is the
+  single space a run collapses to; matching it would rewrite every word
+  boundary into itself.
 """
 
 from __future__ import annotations
@@ -102,11 +113,27 @@ _REJOIN_RES = tuple(
     for a, b, joined in REJOIN
 )
 _SPELL_RES = tuple((r"\b" + re.escape(a) + r"\b", b) for a, b in SPELLING)
+# steps 6-7 gate: the source strings as unanchored literals, a superset
+# of the rows any of the 11 passes can rewrite
+_RESPELL_SOURCES_RE = "|".join(
+    [re.escape(f"{a} {b}") for a, b, _ in REJOIN] + [re.escape(a) for a, _ in SPELLING]
+)
 _GLUED_RE = r"\b(\d+(?:\.\d+)?)(" + "|".join(UNITS) + r")\b"
 _SLASH_RE = r"\b([a-z]+)/([a-z]+)\b"
-_MULTISPACE_RE = r"[ \t]+"
+_MULTISPACE_RE = r" [ \t]+|\t[ \t]*"  # runs that change; a lone space stays
 _EDGE_SPACE_RE = r"[ \t]*\n[ \t]*"
 _BLANK_LINES_RE = r"\n{2,}"
+
+
+def _respell(s: pd.Series) -> pd.Series:
+    """Steps 6-7 on the rows holding a source string; the rest can't change."""
+    gate = s.str.contains(_RESPELL_SOURCES_RE, regex=True)
+    if not gate.any():
+        return s
+    r = s[gate]
+    for rx, repl in _REJOIN_RES + _SPELL_RES:
+        r = r.str.replace(rx, repl, regex=True)
+    return s.mask(gate, r)
 
 
 def cleanup_series(s: pd.Series) -> pd.Series:
@@ -131,10 +158,7 @@ def cleanup_series(s: pd.Series) -> pd.Series:
     s = s.str.replace(_GT_GF_RE, r"\1g", regex=True)                   # 3b
     s = s.str.replace(_FOOTER_RE, "", regex=True)                      # 4
     s = s.str.replace(_OH_ZERO_RE, r"0\1", regex=True)                 # 5
-    for rx, joined in _REJOIN_RES:                                     # 6
-        s = s.str.replace(rx, joined, regex=True)
-    for rx, repl in _SPELL_RES:                                        # 7
-        s = s.str.replace(rx, repl, regex=True)
+    s = _respell(s)                                                    # 6-7
     s = s.str.replace(_GLUED_RE, r"\1 \2", regex=True)                 # 8
     s = s.str.replace(_SLASH_RE, r"\1 \2", regex=True)                 # 9
     s = s.str.replace(_MULTISPACE_RE, " ", regex=True)                 # 10

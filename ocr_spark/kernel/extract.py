@@ -19,7 +19,8 @@ calls it per Arrow batch inside ``mapInPandas``).  Stages:
    found by one alternation scan per line.
 6. field extraction + conflict/absence   — kernel.fields, one pass per row:
    P1 -> P2 fill-missing -> absence -> expiry -> JSON string.
-7. token spans + counters                — vectorized explode pipeline.
+7. counters from separator counts; token spans (``with_spans``) from a
+   per-row split walk.
 
 Output columns (stable schema, see ``OUTPUT_SCHEMA`` in pipeline.py):
     conv_id, turn_idx, extracted_text, spans_json, fields_json,
@@ -32,6 +33,8 @@ import json
 import re
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ocr_spark.kernel import bilingual
 from ocr_spark.kernel.cleanup import cleanup_series
@@ -45,9 +48,11 @@ _PARA_SPLIT_RE = re.compile(r"\n\s*\n")
 # (Ingredients_OCR.py:295-305): "2024 JAN 05" / "2024:JAN:05" first, then
 # the "JAN 05 2024" order as fallback.  Run on the RAW text (pre-cleanup,
 # like the reference, which scans the raw OCR string) — the cleanup chain
-# lowercases, which would kill the [A-Z] month token.
-_EXPIRY_RE1 = r"(20[0-9]{2}[ :/]?[A-Z]{2,3}[ :/]?[0-9]{2})"
-_EXPIRY_RE2 = r"([A-Z]{2,3}[ :/][0-9]{2}[ :/]20[0-9]{2})"
+# lowercases, which would kill the [A-Z] month token.  Both run in Arrow's
+# RE2: they use only ASCII classes and literals, on which RE2 and Python
+# `re` find the same leftmost match (tests/test_property.py).
+_EXPIRY_RE1 = r"(?P<date>20[0-9]{2}[ :/]?[A-Z]{2,3}[ :/]?[0-9]{2})"
+_EXPIRY_RE2 = r"(?P<date>[A-Z]{2,3}[ :/][0-9]{2}[ :/]20[0-9]{2})"
 
 # Faithful port of the reject-gate vocabulary and counting rule of
 # ``is_american_nft`` (NFT_OCR.py:959-978): for each vocabulary term, look
@@ -64,7 +69,8 @@ _VIT_TERMS = (
 # alternatives that share a start ("vitamin ...") exclude one another, so
 # no match can hide another term's occurrence.  tests/test_property.py
 # checks this against the per-term definition.
-_VIT_SCAN = re.compile(r"\b(?:" + "|".join(re.escape(t) for t in _VIT_TERMS) + r")\b")
+_VIT_ALT = "|".join(re.escape(t) for t in _VIT_TERMS)
+_VIT_SCAN = re.compile(r"\b(?:" + _VIT_ALT + r")\b")
 _REJECT_MIN_COUNT = 3
 
 
@@ -83,6 +89,7 @@ STATUS_OK = "ok"
 STATUS_EMPTY = "empty"
 STATUS_REJECTED = "rejected"
 STATUS_TOOL_ERROR = "tool_parse_error"
+STATUS_LAYOUT_ERROR = "layout_parse_error"
 
 OUTPUT_COLUMNS = [
     "conv_id",
@@ -112,15 +119,46 @@ def _tool_output(raw: str) -> str | None:
     return doc if isinstance(doc, str) else json.dumps(doc, sort_keys=True)
 
 
-def _spans_and_counts(
-    extracted: pd.Series, build: bool = True
-) -> tuple[pd.Series | None, pd.Series, pd.Series, pd.Series]:
-    """Vectorized token-span assembly from extracted text.
+def _expiry(raw: pd.Series) -> pd.Series:
+    """Expiry date per row: pattern 1's match, else pattern 2's, else None."""
+    arr = pa.array(raw, type=pa.large_string())
+    dates = pc.coalesce(
+        *(pc.struct_field(pc.extract_regex(arr, rx), [0]) for rx in (_EXPIRY_RE1, _EXPIRY_RE2))
+    )
+    return pd.Series(dates.to_pandas(), index=raw.index)
+
+
+def _counts(extracted: pd.Series) -> tuple[pd.Series, pd.Series, pd.Series]:
+    """(n_blocks, n_lines, n_tokens) per row, from separator counts.
+
+    Cleanup output has canonical separators: blocks are split by exactly
+    one blank line, lines by one newline, tokens by one space, with no
+    empty line and no empty token (runs are collapsed and every line is
+    edge-trimmed).  So a non-empty text has count("\\n\\n") + 1 blocks,
+    count("\\n") - count("\\n\\n") + 1 lines and count(" ") + n_lines
+    tokens — the counts of the split walk in :func:`_spans`, with no walk
+    (tests/test_property.py checks them against it)."""
+    arr = pa.array(extracted, type=pa.large_string())
+    blank, newline, space = (
+        pc.count_substring(arr, sep).to_numpy() for sep in ("\n\n", "\n", " ")
+    )
+    nonempty = pc.binary_length(arr).to_numpy() > 0
+    n_blocks = (blank + 1) * nonempty
+    n_lines = (newline - blank + 1) * nonempty
+    idx = extracted.index
+    return (
+        pd.Series(n_blocks, index=idx, dtype="int64"),
+        pd.Series(n_lines, index=idx, dtype="int64"),
+        pd.Series(space * nonempty + n_lines, index=idx, dtype="int64"),
+    )
+
+
+def _spans(extracted: pd.Series) -> pd.Series:
+    """Token-span assembly from extracted text.
 
     Span = (block_id, line_id, pos, token) over the canonical separators
     (blocks: blank line, lines: newline, tokens: single space) — the
     transcript analog of the reference's (block_num, line, dist) triple.
-    Returns (spans_json, n_blocks, n_lines, n_tokens) aligned to input index.
 
     Wire format is line-grouped columnar: one record per line,
     ``{"b":<block>,"l":<line>,"t":["tok0","tok1",...]}``, with a token's
@@ -136,27 +174,10 @@ def _spans_and_counts(
     # split/explode/cumcount/groupby pipeline ~5x (no index machinery per
     # token) — verified byte-identical before the swap.
     spans: list[str] = []
-    nb: list[int] = []
-    nl: list[int] = []
-    nt: list[int] = []
     for text in extracted:
-        if not text:
-            spans.append("[]")
-            nb.append(0)
-            nl.append(0)
-            nt.append(0)
-            continue
         items: list[str] = []
-        blocks = lines = tokens = 0
-        for b, block in enumerate(text.split("\n\n")):
-            blocks += 1
+        for b, block in enumerate(text.split("\n\n") if text else ()):
             for li, line in enumerate(block.split("\n")):
-                lines += 1
-                if not build:
-                    # count-only fast path: same split walk (so the counts
-                    # are definitionally identical), no escaping/assembly
-                    tokens += sum(1 for tok in line.split(" ") if tok)
-                    continue
                 toks: list[str] = []
                 for tok in line.split(" "):
                     if not tok:
@@ -171,18 +192,8 @@ def _spans_and_counts(
                 if toks:
                     quoted = '","'.join(toks)
                     items.append(f'{{"b":{b},"l":{li},"t":["{quoted}"]}}')
-                tokens += len(toks)
         spans.append("[" + ",".join(items) + "]")
-        nb.append(blocks)
-        nl.append(lines)
-        nt.append(tokens)
-    idx = extracted.index
-    return (
-        pd.Series(spans, index=idx) if build else None,
-        pd.Series(nb, index=idx, dtype="int64"),
-        pd.Series(nl, index=idx, dtype="int64"),
-        pd.Series(nt, index=idx, dtype="int64"),
-    )
+    return pd.Series(spans, index=extracted.index)
 
 
 def extract_turn(text: str, tool: str = "", role: str = "user") -> dict:
@@ -201,9 +212,10 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
     ``extracted_text`` (canonical separators), so downstream consumers
     derive it losslessly JVM-side
     (``ocr_spark.operators.transcripts.derive_spans``) instead of paying
-    its bytes through every Arrow hop and shuffle; the count columns
-    (n_blocks/n_lines/n_tokens) are identical in both modes (pinned by
-    tests/test_parity.py::test_derived_spans_match_kernel)."""
+    its bytes through every Arrow hop and shuffle.  The count columns
+    (n_blocks/n_lines/n_tokens) are computed the same way in both modes,
+    and the derived spans match the kernel's
+    (tests/test_parity.py::test_derived_spans_match_kernel)."""
     pdf = pdf.reset_index(drop=True)
     n = len(pdf)
     text = pdf["text"].fillna("").astype(str)
@@ -228,7 +240,9 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
 
     blocks = pd.Series([[]] * n, index=payload.index, dtype=object)
     if layout_mask.any():
-        blocks.loc[layout_mask] = payload[layout_mask].map(layout_extract)
+        parsed = payload[layout_mask].map(layout_extract)
+        status.loc[parsed.index[parsed.isna()]] = STATUS_LAYOUT_ERROR
+        blocks.loc[layout_mask] = parsed  # None joins to "" below
     if html_mask.any():
         blocks.loc[html_mask] = payload[html_mask].map(html_extract)
     if plain_mask.any():
@@ -258,19 +272,18 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
         raw = joined_pre
 
     # 3c. expiry dates from the RAW text (extract_expiry,
-    # Ingredients_OCR.py:295-305): pattern 1, else pattern 2, else none
-    expiry = raw.str.extract(_EXPIRY_RE1, expand=False)
-    need2 = expiry.isna()
-    if need2.any():
-        expiry.loc[need2] = raw[need2].str.extract(_EXPIRY_RE2, expand=False)
+    # Ingredients_OCR.py:295-305)
+    expiry = _expiry(raw)
 
     # 4. ordered cleanup chain (vectorized)
     cleaned = cleanup_series(raw)
 
-    # 5. document gate (is_american_nft port, NFT_OCR.py:959-978); cheap
-    # vectorized prefilter, then the exact first-occurrence-line rule on
-    # the few candidate rows
-    has_vit = cleaned.str.contains(_VIT_SCAN, regex=True).fillna(False).astype(bool)
+    # 5. document gate (is_american_nft port, NFT_OCR.py:959-978); an
+    # Arrow RE2 prefilter (the unanchored term alternation, a superset of
+    # the \b-bounded one), then the exact first-occurrence-line rule on
+    # the candidate rows
+    vit = pc.match_substring_regex(pa.array(cleaned, type=pa.large_string()), _VIT_ALT)
+    has_vit = pd.Series(vit.to_numpy(zero_copy_only=False), index=cleaned.index)
     reject_mask = pd.Series(False, index=cleaned.index)
     if has_vit.any():
         reject_mask.loc[has_vit] = cleaned[has_vit].map(_is_american).astype(bool)
@@ -285,15 +298,13 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
     fields_json, n_fields = extract_fields_series(cleaned, expiry=expiry)
 
     # 7. spans + counters
-    spans_json, n_blocks, n_lines, n_tokens = _spans_and_counts(
-        cleaned, build=with_spans
-    )
+    n_blocks, n_lines, n_tokens = _counts(cleaned)
 
     cols = {
         "conv_id": pdf["conv_id"].astype(str),
         "turn_idx": pdf["turn_idx"].astype("int32"),
         "extracted_text": cleaned,
-        "spans_json": spans_json,
+        "spans_json": _spans(cleaned) if with_spans else None,
         "fields_json": fields_json,
         "n_blocks": n_blocks,
         "n_lines": n_lines,

@@ -81,19 +81,20 @@ def looks_like_layout(text: str) -> bool:
     return t.startswith("{") and '"pages"' in t[:64]
 
 
-def layout_extract(payload: str) -> list[str]:
+def layout_extract(payload: str) -> list[str] | None:
     """Parse a layout JSON payload into reading-ordered block texts.
 
     Returns a list of block strings; within a block, lines are joined by a
     single ``\\n`` and spans within a line by a single space.  Malformed
-    payloads yield ``[]`` (the caller records a failure span — the
-    existence-guard pattern of ``NFT_OCR.py:1491``).
+    payloads yield ``None``, which the caller records as status
+    ``layout_parse_error``, a failure span (the existence-guard pattern of
+    ``NFT_OCR.py:1491``); a well-formed payload with no text yields ``[]``.
     """
     try:
         doc = json.loads(payload)
         pages = doc["pages"]
     except (ValueError, TypeError, KeyError):
-        return []
+        return None
 
     blocks_out: list[str] = []
     try:
@@ -121,6 +122,6 @@ def layout_extract(payload: str) -> list[str]:
                     blocks_out.append("\n".join(line_texts))
     except (TypeError, AttributeError, IndexError, KeyError):
         # e.g. a bbox list with <2 elements — malformed payloads must
-        # degrade to [] (failure span), never crash the Arrow batch
-        return []
+        # degrade to a failure span, never crash the Arrow batch
+        return None
     return blocks_out

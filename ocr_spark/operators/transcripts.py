@@ -31,7 +31,7 @@ from ocr_spark.synth import generate_spark
 N_CONVS = 150
 
 # line-grouped columnar span records (see kernel/extract.py
-# _spans_and_counts): token pos is implicit in the "t" array index
+# _spans): token pos is implicit in the "t" array index
 SPAN_SCHEMA = ArrayType(
     StructType(
         [
@@ -137,7 +137,7 @@ def derive_spans(extracted):
     codegen (split/posexplode/filter), no Python, no JSON.
 
     This is the at-scale counterpart of the kernel's inline ``spans_json``
-    (``kernel/extract.py _spans_and_counts``): extracted text has
+    (``kernel/extract.py _spans``): extracted text has
     canonical separators (blocks: blank line, lines: newline, tokens:
     single space), so splitting here reproduces the kernel's span relation
     exactly — pinned by tests/test_parity.py::test_derived_spans_match_kernel.

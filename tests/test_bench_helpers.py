@@ -12,6 +12,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench
@@ -96,3 +98,33 @@ def test_history_summary_filters_cutoff_and_contamination(tmp_path):
 
 def test_history_summary_missing_file_returns_none(tmp_path):
     assert bench._history_summary(str(tmp_path / "nope.md")) is None
+
+
+def test_scale_levels_fit_in_nproc():
+    # the mandated pair where it fits
+    assert bench._scale_levels(8, 32) == (8, 32)
+    assert bench._scale_levels(2, 8) == (2, 8)
+    # a 4-core box: local[2] vs local[8] would need cores it does not have
+    assert bench._scale_levels(2, 4) == (1, 4)
+    for nproc in range(1, 65):
+        for n in range(1, 17):
+            lo, hi = bench._scale_levels(n, nproc)
+            assert 1 <= lo <= hi <= nproc
+
+
+def test_pin_cores_are_allowed_ids():
+    assert bench._pin_cores(4, {0, 1, 2, 3}) == [0, 1, 2, 3]
+    assert bench._pin_cores(1, {0, 1, 2, 3}) == [3]
+    # affinity masks need not be 0..n-1
+    assert bench._pin_cores(2, {4, 5, 9}) == [5, 9]
+    for k in (0, 5):
+        with pytest.raises(ValueError):
+            bench._pin_cores(k, {0, 1, 2, 3})
+
+
+def test_driver_memory_sized_from_memtotal(tmp_path):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       15728640 kB\nMemFree:         1000 kB\n")
+    assert bench._driver_memory(str(meminfo)) == "7680m"
+    meminfo.write_text("MemTotal:       134217728 kB\n")
+    assert bench._driver_memory(str(meminfo)) == "16384m"

@@ -106,7 +106,25 @@ def test_layout_same_line_merge():
 
 
 def test_layout_malformed_is_failure_not_crash():
-    assert layout_extract('{"pages": "nope"}') == []
+    assert layout_extract('{"pages": "nope"}') is None
+    assert layout_extract('{"pages": []}') == []  # well-formed, no text
+
+
+def test_layout_malformed_gets_failure_status():
+    """A layout payload that does not parse is a failure, not an empty
+    turn: status ``layout_parse_error`` (like ``tool_parse_error``), so
+    ``failure_spans`` lists it."""
+    for payload in (
+        '{"pages": "nope"}',
+        '{"pages": [}',
+        '{"pages":[{"blocks":[{"bbox":[5],"lines":[{"y":1,"spans":[{"x":0,"text":"a"}]}]}]}]}',
+    ):
+        r = extract_turn(payload)
+        assert r["status"] == "layout_parse_error", payload
+        assert (r["extracted_text"], r["fields_json"], r["n_tokens"]) == ("", "{}", 0)
+        tool = json.dumps({"name": "pdf", "output": payload})
+        assert extract_turn("", tool=tool, role="tool")["status"] == "layout_parse_error"
+    assert extract_turn('{"pages": []}')["status"] == "empty"
 
 
 def test_layout_short_bbox_still_extracts():
@@ -127,8 +145,8 @@ def test_layout_short_bbox_still_extracts():
         }
     )
     assert layout_extract(payload) == ["calories 100", "protein 5 g"]
-    # <2 elements still degrades to [] (failure span), as before
-    assert layout_extract('{"pages":[{"blocks":[{"bbox":[5],"lines":[{"y":1,"spans":[{"x":0,"text":"a"}]}]}]}]}') == []
+    # <2 elements is still a parse failure (failure span)
+    assert layout_extract('{"pages":[{"blocks":[{"bbox":[5],"lines":[{"y":1,"spans":[{"x":0,"text":"a"}]}]}]}]}') is None
 
 
 def test_fields_pass2_backfills_unit_when_qty_present():
@@ -393,7 +411,7 @@ def test_unclosed_heading_does_not_leak_floor():
 
 def test_malformed_bbox_is_failure_not_crash():
     payload = '{"pages":[{"blocks":[{"bbox":[5],"lines":[{"y":1,"spans":[{"x":0,"text":"a"}]}]}]}]}'
-    assert layout_extract(payload) == []
+    assert layout_extract(payload) is None
 
 
 def test_tool_non_dict_payloads_canonical_json():
