@@ -35,9 +35,44 @@ Design notes (100 TB posture):
   boundary; ts and any extra columns are joined back by key only if needed.
 - the whole cleanup chain is ONE mapInPandas stage: each extra UDF hop would
   pay Arrow serialization twice (SURVEY §4 "pipelining").
+- per-task worker cost: the reference's loop paid no fixed cost per file,
+  but every Spark task pays two pieces of Python-worker bookkeeping before
+  and after its batches (measured on a 4-core VM, CPython 3.11.7, Spark
+  4.1.2, a warmed worker):
+
+  * before each task, ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, which makes every ``zipimporter``
+    on the worker (pyspark.zip, the py4j zip, the 5,359-entry spark-core
+    jar: 16 importers, one per imported package directory) re-read its
+    whole archive directory: 55-67 ms per task.  CPython 3.13 made that
+    re-read lazy;
+  * after each task, the reused worker runs ``gc.collect()`` over the
+    whole import heap (pandas, pyarrow, pyspark, the kernel): 32-38 ms on
+    average, up to 74 ms, which the worker's next task waits for.
+
+  ``_prepare_worker`` runs once per worker process, from the top of
+  ``_extract_map``.  It makes an importer re-read its archive only when
+  the archive's ``os.stat`` key (inode, size, mtime_ns) differs from the
+  key taken just before that importer's last re-read, or the archive is
+  gone; such a re-read is the original method itself.  A replaced or
+  rewritten archive therefore imports exactly as before: the key changes
+  whenever a rewrite changes inode, size or mtime.  The one change it
+  cannot see is an in-place, same-size rewrite within one filesystem
+  timestamp tick, a narrower form of the blind spot CPython's own
+  ``.pyc`` check has (source mtime in whole seconds, and size).  The prep
+  then runs ``gc.collect()`` and ``gc.freeze()`` once, so the per-task
+  collection walks only objects made after the kernel was imported.
+  From a worker's third task on (its first runs before the prep, its
+  second takes each importer's key), both costs are under 1 ms per task.
 """
 
 from __future__ import annotations
+
+import functools
+import gc
+import logging
+import os
+import zipimport
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -77,15 +112,39 @@ OUTPUT_SCHEMA_NO_SPANS = StructType(
 
 INPUT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool"]
 
+_log = logging.getLogger(__name__)
 
-def _extract_map(batches):
+_worker_ready = False
+
+
+def _prepare_worker() -> None:
+    """Cut the per-task worker bookkeeping (module docstring), once per
+    process: stat-keyed zip re-reads, then a frozen import heap."""
+    global _worker_ready
+    if _worker_ready:
+        return
+    _worker_ready = True
+    reread = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            key = None
+        if key is None or key != getattr(self, "_stat_key", None):
+            reread(self)
+            self._stat_key = key
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    gc.collect()
+    gc.freeze()
+
+
+def _extract_map(batches, with_spans=True):
+    _prepare_worker()
     for pdf in batches:
-        yield extract_batch(pdf)
-
-
-def _extract_map_no_spans(batches):
-    for pdf in batches:
-        yield extract_batch(pdf, with_spans=False)
+        yield extract_batch(pdf, with_spans=with_spans)
 
 
 DEFAULT_SALT = 8
@@ -102,19 +161,19 @@ DEFAULT_SALT = 8
 _SCAN_SHAPED_NODES = frozenset({"LogicalRelation", "LocalRelation", "Project", "Filter"})
 
 
-def _partitioning_may_correlate(df: DataFrame) -> bool:
-    """True unless every node of the input's optimized logical plan is
-    scan-shaped (see ``_SCAN_SHAPED_NODES``) — otherwise partition-count
-    heuristics are blind to long-conversation skew and salt="auto" must
-    keep the salted repartition."""
+def _partitioning_may_correlate(df: DataFrame) -> str | None:
+    """The first node of the input's optimized logical plan that is not
+    scan-shaped (see ``_SCAN_SHAPED_NODES``), or None.  When there is one,
+    partition-count heuristics are blind to long-conversation skew and
+    salt="auto" must keep the salted repartition."""
     stack = [df._jdf.queryExecution().optimizedPlan()]
     while stack:
         node = stack.pop()
         if node.nodeName() not in _SCAN_SHAPED_NODES:
-            return True
+            return node.nodeName()
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
-    return False
+    return None
 
 
 def extract_transcripts(
@@ -159,41 +218,56 @@ def extract_transcripts(
     ``extracted_text`` with ``transcripts.derive_spans`` when needed.
     ``spans=True`` keeps the inline JSON for full-fidelity artifacts
     (the byte-parity suite, scripts/run_extract.py e2e output).
+
+    The partitioning decision is logged as one INFO record on the
+    ``ocr_spark.pipeline`` logger: the branch (``in_place``, ``coalesce``
+    or ``salted``), the effective salt, ``n_in`` (None for an explicit
+    salt, whose input is never planned), ``n_part`` and the reason.
     """
     spark = df.sparkSession
     n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     pruned = df.select(*INPUT_COLUMNS)
     staged = pruned
-    eff_salt = salt
+    eff_salt, n_in, reason = salt, None, "explicit"
     if salt == "auto":
         n_in = pruned.rdd.getNumPartitions()
-        if _partitioning_may_correlate(pruned):
+        node = _partitioning_may_correlate(pruned)
+        if node:
             # shuffled/grouped/sorted upstream: partition membership can be
             # a function of conv_id, so a healthy partition COUNT proves
             # nothing about per-task work — keep the skew insurance
-            eff_salt = DEFAULT_SALT
+            eff_salt, reason = DEFAULT_SALT, f"plan_node:{node}"
         elif n_in >= n_part:
             # over-partitioned scan (e.g. many small files): narrow merge to
             # the target wave count — adjacent partitions concatenate, no
             # shuffle, and a no-op when counts already match
             staged = pruned.coalesce(n_part)
-            eff_salt = 0
+            eff_salt, reason = 0, "scan_over_partitioned"
         elif n_in >= spark.sparkContext.defaultParallelism:
             # adequate parallelism and size-bounded splits: run in place
-            eff_salt = 0
+            eff_salt, reason = 0, "scan_parallel_enough"
         else:
-            eff_salt = DEFAULT_SALT
+            eff_salt, reason = DEFAULT_SALT, "under_partitioned"
     if eff_salt:
         staged = pruned.repartition(
             n_part,
             F.hash(F.col("conv_id")),
             F.pmod(F.hash(F.col("turn_idx")), F.lit(eff_salt)),
         )
+        branch = "salted"
+    else:
+        branch = "in_place" if staged is pruned else "coalesce"
+    _log.info(
+        "extract_transcripts plan: branch=%s salt=%s n_in=%s n_part=%s reason=%s",
+        branch, eff_salt, n_in, n_part, reason,
+    )
     if spans:
         extracted = staged.mapInPandas(_extract_map, OUTPUT_SCHEMA)
     else:
-        extracted = staged.mapInPandas(_extract_map_no_spans, OUTPUT_SCHEMA_NO_SPANS)
+        extracted = staged.mapInPandas(
+            functools.partial(_extract_map, with_spans=False), OUTPUT_SCHEMA_NO_SPANS
+        )
 
     if reassemble == "sorted":
         return extracted.sortWithinPartitions("conv_id", "turn_idx")

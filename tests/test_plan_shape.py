@@ -8,6 +8,8 @@ stage."""
 
 from __future__ import annotations
 
+import logging
+
 from ocr_spark import synth
 from ocr_spark.pipeline import INPUT_COLUMNS, extract_transcripts
 
@@ -161,6 +163,64 @@ def test_auto_salt_scan_shapes_stay_in_place(spark, tmp_path):
         assert not _partitioning_may_correlate(scan)
     for other in (df.sample(0.5, seed=1), df.union(df), df.limit(5), df.coalesce(1)):
         assert _partitioning_may_correlate(other)
+
+
+def _plan_records(caplog):
+    return [r.getMessage() for r in caplog.records if r.name == "ocr_spark.pipeline"]
+
+
+def test_plan_decision_is_logged(spark, tmp_path, caplog):
+    """extract_transcripts logs its partitioning decision once: branch,
+    effective salt, n_in, n_part and the reason."""
+    caplog.set_level(logging.INFO, logger="ocr_spark.pipeline")
+    path = str(tmp_path / "t8.parquet")
+    spark.createDataFrame(synth.generate_local(40)).repartition(8).write.parquet(path)
+    df = spark.read.parquet(path)
+    n_in = df.rdd.getNumPartitions()
+
+    out = extract_transcripts(df, salt="auto", partitions=n_in, reassemble="sorted")
+    assert _plan_records(caplog) == [
+        f"extract_transcripts plan: branch=coalesce salt=0 n_in={n_in} n_part={n_in} "
+        "reason=scan_over_partitioned"
+    ]
+    _, executed = _plan(out)
+    assert executed.count("Exchange") == 0, executed  # the logged branch is the one planned
+
+    caplog.clear()
+    extract_transcripts(df.coalesce(1), salt="auto", partitions=8, reassemble=False)
+    assert _plan_records(caplog) == [
+        "extract_transcripts plan: branch=salted salt=8 n_in=1 n_part=8 reason=plan_node:Repartition"
+    ]
+
+    caplog.clear()
+    extract_transcripts(df, salt=0, partitions=8, reassemble=False)
+    assert _plan_records(caplog) == [
+        "extract_transcripts plan: branch=in_place salt=0 n_in=None n_part=8 reason=explicit"
+    ]
+
+
+def test_plan_decision_log_names_grouped_map_node(spark, tmp_path, caplog):
+    caplog.set_level(logging.INFO, logger="ocr_spark.pipeline")
+    path = str(tmp_path / "t9.parquet")
+    spark.createDataFrame(synth.generate_local(40)).write.parquet(path)
+    df = spark.read.parquet(path)
+    grouped = df.groupBy("conv_id").applyInPandas(lambda pdf: pdf, df.schema)
+    extract_transcripts(grouped, salt="auto", partitions=8, reassemble=False)
+    (msg,) = _plan_records(caplog)
+    assert msg.startswith("extract_transcripts plan: branch=salted salt=8 n_in="), msg
+    assert msg.endswith("n_part=8 reason=plan_node:FlatMapGroupsInPandas"), msg
+
+
+def test_under_partitioned_scan_logs_its_reason(spark, tmp_path, caplog):
+    caplog.set_level(logging.INFO, logger="ocr_spark.pipeline")
+    path = str(tmp_path / "t10.parquet")
+    spark.createDataFrame(synth.generate_local(10)).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    extract_transcripts(df, salt="auto", partitions=8, reassemble=False)
+    assert _plan_records(caplog) == [
+        "extract_transcripts plan: branch=salted salt=8 n_in=1 n_part=8 reason=under_partitioned"
+    ]
 
 
 def test_auto_sorted_output_matches_salted_windowed(spark, tmp_path):
