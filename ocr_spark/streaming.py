@@ -28,7 +28,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.pipeline import OUTPUT_SCHEMA, _extract_map
+from ocr_spark.pipeline import DEFAULT_SALT, extract_transcripts
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -69,11 +69,10 @@ def stream_extract(
     exactly as the batch path's `result()` does.
     """
     src = stream_source(spark, input_dir)
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    salted = src.repartition(
-        n_part, F.hash(F.col("conv_id")), F.pmod(F.hash(F.col("turn_idx")), F.lit(8))
+    # an explicit salt never plans the input, so this is safe on a stream
+    extracted = extract_transcripts(
+        src, salt=DEFAULT_SALT, partitions=partitions, reassemble=False, spans=True
     )
-    extracted = salted.mapInPandas(_extract_map, OUTPUT_SCHEMA)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)

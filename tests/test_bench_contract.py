@@ -4,54 +4,40 @@ The driver captures only the LAST 2000 chars of bench output; round 4's
 full-detail JSON line exceeded that and BENCH_r04.json recorded
 ``parsed: null`` — the most load-bearing artifact of the round was
 unreadable.  This test pins the fix: the compact projection of a
-FULLY-POPULATED result (every optional block present, worst-case rep
-counts, rescue audit fields, complete history) must stay under 1800
-chars, leaving ≥200 chars of slack inside the capture window.
+FULLY-POPULATED result (every optional block present, both perfbench
+workloads with every metric) must stay under 1800 chars, leaving ≥200
+chars of slack inside the capture window.
 """
 
 import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench
 
 
-def _full_pair(lo: int, hi: int, reps: int) -> dict:
-    def lvl(sec):
-        return {
-            "sec": sec,
-            "turns_per_sec": round(311269 / sec, 1),
-            "all_runs_sec": [round(sec * (1 + 0.37 * i), 2) for i in range(reps)],
-        }
-
+def _perfbench_runs(tps: float) -> dict:
+    """A workload's parsed untraced + traced perfbench results, every
+    metric BENCHMARK.json declares populated."""
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        decl = json.load(f)
+    e2e = {m["name"]: 0.789 for m in decl["end_to_end"]}
+    layers = {m["name"]: 12345.678 for m in decl["per_layer"]}
+    e2e["turns_per_s"] = tps
+    layers["kernel.mp_eff"] = 0.931
     return {
-        "turns": 311269,
-        "levels": [lo, hi],
-        f"local[{lo}]": lvl(24.77),
-        f"local[{hi}]": lvl(11.96),
-        "scaling_efficiency": 0.518,
-        "control": {
-            f"mp[{lo}]": lvl(14.53),
-            f"mp[{hi}]": lvl(4.42),
-            "efficiency": 0.823,
-        },
-        "normalized_efficiency": 0.629,
-        "convs": 60000,
-        "collapsed": True,
-        "rescue_reps": 1,
-        "pre_rescue": {"scaling_efficiency": 0.119, "normalized_efficiency": 0.145},
+        "untraced": {"attempted": 88000, "failed": 0, "metrics": e2e},
+        "traced": {"attempted": 176000, "failed": 0, "metrics": layers},
     }
 
 
 def _full_result() -> dict:
     queries = {q: 12.34 for q in bench.HEADLINE}
     return {
-        "metric": (
-            "headline ops wall-clock at sf + extraction turns/sec at two "
-            "parallelism levels"
-        ),
+        "metric": "headline ops wall-clock at sf + perfbench extraction metrics",
         "value": round(sum(queries.values()), 2),
         "unit": "sec",
         "queries": queries,
@@ -96,26 +82,8 @@ def _full_result() -> dict:
             },
         },
         "extraction": {
-            **_full_pair(8, 32, 5),
-            "secondary": {**_full_pair(2, 8, 2), "convs": 20000},
-            "peak": {"cores": 16, "sec": 4.48, "turns_per_sec": 69479.7},
-        },
-        "history": {
-            "since": bench.FIX_CUTOFF,
-            "note": "x" * 300,  # prose must NOT survive into the printed line
-            "extraction": {
-                "primary_raw": {"n": 30, "median": 0.51, "best": 0.65},
-                "primary_norm": {"n": 30, "median": 0.727, "best": 0.903},
-                "secondary_raw": {"n": 29, "median": 0.767, "best": 0.976},
-                "secondary_norm": {"n": 29, "median": 0.844, "best": 1.076},
-                "peak_turns_per_sec": {"n": 17, "median": 50448.8, "best": 69479.7},
-            },
-            "headline": {
-                "n": 9,
-                "total_median": 18.19,
-                "total_best": 13.17,
-                "per_query_best": {q: 1.77 for q in bench.HEADLINE},
-            },
+            "short_turns": _perfbench_runs(82512.7),
+            "long_payloads": _perfbench_runs(1155.2),
         },
     }
 
@@ -130,23 +98,22 @@ def test_compact_keeps_driver_contract_keys():
     for key in ("metric", "value", "unit", "queries", "sf"):
         assert key in out
     assert set(out["queries"]) == set(bench.HEADLINE)
-    # scaling evidence survives: both pairs' efficiencies + audit flags
-    ex = out["extraction"]
-    assert ex["eff"] == 0.518 and ex["norm_eff"] == 0.629
-    assert ex["collapsed"] is True and ex["pre_rescue_norm"] == 0.145
-    assert ex["secondary"]["eff"] == 0.518
-    assert ex["peak_tps"] == 69479
-    # history numbers survive; prose and per-query maps do not
-    hist = out["history"]
-    assert hist["primary_norm"] == {"n": 30, "median": 0.727, "best": 0.903}
-    assert "note" not in hist and "per_query_best" not in json.dumps(hist)
+    # both workloads' scaling and layer figures survive
+    for name in ("short_turns", "long_payloads"):
+        ex = out["extraction"][name]
+        assert ex["eff"] == 0.789 and ex["norm_eff"] == round(0.789 / 0.931, 3)
+        assert ex["l0_tps"] == ex["l1_tps"] == 12345
+        assert ex["l2_identity_s"] == ex["l2_overhead_s"] == 12345
     # guard collapses to one audit scalar (nonzero drop stays visible)
     assert out["lsh_guard"] == {"dropped_rows": 712}
 
 
 def test_compact_error_paths_still_fit():
     r = _full_result()
-    r["extraction"] = {"error": "all scaling worker reps failed " * 20}
+    long = {"error": "rc=1: Traceback " + "java.lang.OutOfMemoryError " * 20}
+    r["extraction"] = {
+        name: {"untraced": long, "traced": long} for name in r["extraction"]
+    }
     r["ann_recall"] = {"error": "boom " * 100}
     r["lsh_guard"] = {"error": "boom " * 100}
     line = json.dumps(bench._compact_result(r))

@@ -1,14 +1,11 @@
-"""Unit tests for bench.py's graded-output machinery (no Spark).
-
-The per-round BENCH_r{N}.json is ONE run in ONE steal window on a host
-whose wall times swing 2-3x; the `history` block and the collapse-rescue
-merge are what keep that graded line representative, so they get their own
-tests: a wrong median or a botched best-of merge would silently misreport
-the repo's headline evidence.
-"""
+"""Unit tests for bench.py's helpers (no Spark): the perfbench result
+parser, the compact extraction block, the history append and the driver
+memory sizing."""
 
 from __future__ import annotations
 
+import json
+import subprocess
 import sys
 from pathlib import Path
 
@@ -17,109 +14,100 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench
+from test_bench_contract import _full_result
 
 
-def _pair(sec_lo, sec_hi, ctl_lo, ctl_hi, turns=1000):
-    out = {"turns": turns, "levels": [8, 32]}
-    for k, sec in ((8, sec_lo), (32, sec_hi)):
-        out[f"local[{k}]"] = {
-            "sec": sec,
-            "turns_per_sec": round(turns / sec, 1),
-            "all_runs_sec": [sec],
-        }
-    out["scaling_efficiency"] = round(
-        out["local[32]"]["turns_per_sec"] / (4 * out["local[8]"]["turns_per_sec"]), 3
+def _metrics(**values):
+    return {k: {"value": v, "unit": "x"} for k, v in values.items()}
+
+
+# last stdout lines in the shape of perfbench/run.py:run_workload
+UNTRACED = {
+    "correct": True,
+    "attempted": 88000,
+    "failed": 0,
+    "metrics": _metrics(
+        turns_per_s=82512.7, scaling_eff=0.787, setup_s=1.197,
+        peak_rss_mb=3148.2, correct_share=1.0,
+    ),
+}
+TRACED = {
+    "correct": True,
+    "attempted": 176000,
+    "failed": 0,
+    "metrics": _metrics(**{
+        "kernel.turns_per_s": 32000.4,
+        "kernel.cleanup_series_s": 0.19,
+        "kernel.mp_turns_per_s": 118000.9,
+        "kernel.mp_eff": 0.93,
+        "pipeline.identity_s": 0.234,
+        "pipeline.overhead_s": 0.28,
+        "pipeline.exchanges": 0,
+    }),
+}
+
+
+def _run(code: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=60
     )
-    ctl = {}
-    for k, sec in ((8, ctl_lo), (32, ctl_hi)):
-        ctl[f"mp[{k}]"] = {
-            "sec": sec,
-            "turns_per_sec": round(turns / sec, 1),
-            "all_runs_sec": [sec],
-        }
-    ctl["efficiency"] = round(
-        ctl["mp[32]"]["turns_per_sec"] / (4 * ctl["mp[8]"]["turns_per_sec"]), 3
-    )
-    out["control"] = ctl
-    out["normalized_efficiency"] = round(
-        out["scaling_efficiency"] / ctl["efficiency"], 3
-    )
-    return out
 
 
-def test_merge_pair_takes_best_of_each_series():
-    a = _pair(10.0, 8.0, 10.0, 4.0)  # collapsed wide run (8s at 32 cores)
-    b = _pair(9.0, 3.0, 9.0, 3.5)  # rescue rep catches an uncollapsed window
-    m = bench._merge_pair(a, b, 8, 32)
-    assert m["local[8]"]["sec"] == 9.0
-    assert m["local[32]"]["sec"] == 3.0
-    # all rep times stay visible, in order
-    assert m["local[32]"]["all_runs_sec"] == [8.0, 3.0]
-    assert m["control"]["mp[32]"]["sec"] == 3.5
-    # efficiency recomputed from the merged bests, not carried over
-    assert m["scaling_efficiency"] == 0.75
-    assert m["rescue_reps"] == 1
+def _printed(obj) -> subprocess.CompletedProcess:
+    return _run(f"print('# metric table'); print({json.dumps(json.dumps(obj))})")
 
 
-def test_merge_pair_ignores_failed_rescue():
-    a = _pair(10.0, 8.0, 10.0, 4.0)
-    m = bench._merge_pair(a, {"error": "all scaling worker reps failed"}, 8, 32)
-    assert m is a
+def test_perfbench_line_projects_to_compact_block():
+    runs = {
+        "untraced": bench._parse_perfbench(_printed(UNTRACED)),
+        "traced": bench._parse_perfbench(_printed(TRACED)),
+    }
+    assert runs["traced"]["metrics"]["kernel.mp_eff"] == 0.93
+    block = bench._compact_workload(runs)
+    assert block == {
+        "tps": 82512,
+        "eff": 0.787,
+        "correct": 1.0,
+        "l0_tps": 32000,
+        "l1_tps": 118000,
+        "l2_identity_s": 0.234,
+        "l2_overhead_s": 0.28,
+        "norm_eff": round(0.787 / 0.93, 3),
+    }
+    assert block["norm_eff"] == pytest.approx(0.787 / 0.93, abs=5e-4)
 
 
-def test_history_summary_filters_cutoff_and_contamination(tmp_path):
-    rows = [
-        # pre-cutoff row: measured against the OLD plan, must be excluded
-        "| 2026-08-17 08:12 | 0.9 | 0.9 | 0.8 | 0.9 | 0.9 | 99999.0 |",
-        # contaminated row: flagged in-line, must be excluded
-        "| 2026-08-18 01:24 | 0.178 | 0.222 | 0.803 | 0.658 | 0.782 | "
-        "contaminated (concurrent job) |",
-        "| 2026-08-17 13:00 | 0.54 | 0.734 | 0.736 | 0.673 | 0.691 | 57113.6 |",
-        "| 2026-08-17 14:38 | 0.65 | 0.881 | 0.738 | 0.813 | 0.939 | 58290.1 |",
-        "| 2026-08-18 02:22 | 0.15 | 0.192 | 0.781 | 0.674 | 0.786 |  |",
-    ]
-    # one headline row (run ts | total | 9 per-query cells)
-    hl = "| 2026-08-17 18:39 | 13.54 | " + " | ".join(["1.0"] * 9) + " |"
-    md = tmp_path / "BENCH.md"
-    md.write_text("\n".join(rows + [hl]) + "\n")
-    s = bench._history_summary(str(md))
-    ex = s["extraction"]
-    # 3 valid post-cutoff rows (pre-cutoff + contaminated excluded)
-    assert ex["primary_raw"]["n"] == 3
-    assert ex["primary_raw"]["best"] == 0.65
-    assert ex["primary_raw"]["median"] == 0.54
-    assert ex["primary_norm"]["best"] == 0.881
-    # empty peak cell is skipped, not parsed as 0
-    assert ex["peak_turns_per_sec"]["n"] == 2
-    assert ex["peak_turns_per_sec"]["best"] == 58290.1
-    assert s["headline"]["n"] == 1
-    assert s["headline"]["total_best"] == 13.54
+def test_failed_or_unparsable_run_becomes_error_entry():
+    crashed = bench._parse_perfbench(_run("import sys; print('starting'); sys.exit(3)"))
+    garbled = bench._parse_perfbench(_run("print('{\"metrics\": {'); print('not json')"))
+    wrong_shape = bench._parse_perfbench(_run("print('[1, 2]')"))
+    assert crashed["error"].startswith("rc=3")
+    assert garbled["error"].startswith("unparsable result")
+    assert "error" in wrong_shape
+    ok = bench._parse_perfbench(_printed(UNTRACED))
+
+    r = _full_result()
+    r["extraction"] = {
+        "short_turns": {"untraced": crashed, "traced": ok},
+        "long_payloads": {"untraced": ok, "traced": garbled},
+    }
+    out = bench._compact_result(r)
+    assert out["extraction"]["short_turns"]["error"].startswith("untraced: rc=3")
+    assert out["extraction"]["long_payloads"]["error"].startswith("traced: unparsable")
+    assert len(json.dumps(out)) < 1800
 
 
-def test_history_summary_missing_file_returns_none(tmp_path):
-    assert bench._history_summary(str(tmp_path / "nope.md")) is None
-
-
-def test_scale_levels_fit_in_nproc():
-    # the mandated pair where it fits
-    assert bench._scale_levels(8, 32) == (8, 32)
-    assert bench._scale_levels(2, 8) == (2, 8)
-    # a 4-core box: local[2] vs local[8] would need cores it does not have
-    assert bench._scale_levels(2, 4) == (1, 4)
-    for nproc in range(1, 65):
-        for n in range(1, 17):
-            lo, hi = bench._scale_levels(n, nproc)
-            assert 1 <= lo <= hi <= nproc
-
-
-def test_pin_cores_are_allowed_ids():
-    assert bench._pin_cores(4, {0, 1, 2, 3}) == [0, 1, 2, 3]
-    assert bench._pin_cores(1, {0, 1, 2, 3}) == [3]
-    # affinity masks need not be 0..n-1
-    assert bench._pin_cores(2, {4, 5, 9}) == [5, 9]
-    for k in (0, 5):
-        with pytest.raises(ValueError):
-            bench._pin_cores(k, {0, 1, 2, 3})
+def test_history_append_keeps_earlier_lines(tmp_path):
+    path = tmp_path / "bench_history.jsonl"
+    first, second = _full_result(), _full_result()
+    second["value"] = 1.5
+    bench._append_history(first, str(path))
+    before = path.read_bytes()
+    bench._append_history(second, str(path))
+    lines = path.read_bytes().splitlines(keepends=True)
+    assert len(lines) == 2
+    assert lines[0] == before
+    assert json.loads(lines[1])["value"] == 1.5
 
 
 def test_driver_memory_sized_from_memtotal(tmp_path):

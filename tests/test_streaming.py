@@ -3,6 +3,7 @@ tracking across restarts, and parity with the batch pipeline."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 from ocr_spark import synth
@@ -52,6 +53,23 @@ def test_stream_matches_batch_and_resumes_incrementally(spark, tmp_path):
     assert _keys(spark.read.parquet(outdir)) == want
     n_files2 = len([f for f in os.listdir(outdir) if f.endswith(".parquet")])
     assert n_files2 >= n_files  # empty commits may add zero-row files, never rows
+
+
+def test_stream_uses_the_batch_salting_policy(spark, tmp_path, caplog):
+    """The stream stages its input through extract_transcripts with the
+    pipeline's DEFAULT_SALT, so its plan decision is logged like a batch
+    job's explicit salt."""
+    caplog.set_level(logging.INFO, logger="ocr_spark.pipeline")
+    indir = str(tmp_path / "lin")
+    _write_chunk(spark, synth.generate_local(4), indir)
+    q = stream_extract(
+        spark, indir, str(tmp_path / "lout"), str(tmp_path / "lckpt"), partitions=4
+    )
+    q.awaitTermination()
+    msgs = [r.getMessage() for r in caplog.records if r.name == "ocr_spark.pipeline"]
+    assert msgs == [
+        "extract_transcripts plan: branch=salted salt=8 n_in=None n_part=4 reason=explicit"
+    ]
 
 
 def test_stateful_conversation_progress(spark, tmp_path):
